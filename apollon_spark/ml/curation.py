@@ -510,6 +510,10 @@ def ngram_lm_score(docs: DataFrame, ref: DataFrame,
     executor-memory pressure at 1000-executor scale; the unigram
     table is probed independently (it is ctx-distinct-bounded and
     usually still broadcastable when the bigram table is not).
+
+    Calling this function runs Spark jobs: the reference-model probe
+    counts above (one, or two when the bigram table is over the
+    threshold) run eagerly, before the returned DataFrame is used.
     """
     if not 0 < alpha:
         raise ValueError("alpha must be positive")

@@ -321,11 +321,11 @@ def assign_bmu(vectors: DataFrame, vec_col: str, weights: np.ndarray,
     vectorized argmin per Arrow batch; never a crossJoin.
 
     ``round_scale``: round the distances to this many decimals BEFORE
-    the argmin (ties -> lowest unit). A determinism knob for
-    value-compared outputs: two units whose true distances differ by
-    float-sum noise usually round to the SAME grid value and the unit
-    tiebreak decides identically everywhere, instead of the raw
-    argmin flipping on the noise. The reported distance is the
+    the argmin (ties -> lowest unit), half-up like SQL ``round``. A
+    determinism knob for value-compared outputs: two units whose true
+    distances differ by float-sum noise usually round to the SAME grid
+    value and the unit tiebreak decides identically everywhere, instead
+    of the raw argmin flipping on the noise. The reported distance is the
     rounded one (rounding is monotone, so min-of-rounded ==
     rounded-min)."""
     spark = vectors.sparkSession
@@ -343,8 +343,9 @@ def assign_bmu(vectors: DataFrame, vec_col: str, weights: np.ndarray,
                 continue
             x = np.stack(pdf[vec_col].to_numpy())
             if st["r"] is not None:
-                d = cdist(st["w"], x, st["m"])
-                d = np.round(d, st["r"])
+                scale = 10.0 ** st["r"]
+                # half-up, as the oracle's SQL round (np.round: half-even)
+                d = np.floor(cdist(st["w"], x, st["m"]) * scale + 0.5) / scale
                 bmu, dist = d.argmin(axis=0), d.min(axis=0)
             else:
                 bmu, dist = best_match(st["w"], x, st["m"])

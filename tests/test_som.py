@@ -176,3 +176,14 @@ def test_vn_neighbourhood_empty_flat():
     assert som.vn_neighbourhood(0, 0, 1, 1) == []
     flat = som.vn_neighbourhood(0, 0, 1, 1, flat=True)
     assert len(flat) == 0
+
+
+def test_assign_bmu_round_scale_is_half_up(spark):
+    """round_scale rounds half-up, like the oracle's SQL round: distances
+    2.5 and 3.5 at scale 0 become 3 and 4 (np.round would give 2 and 4)."""
+    w = np.array([[0.0], [6.0]])
+    vecs = spark.createDataFrame([("a", [2.5]), ("b", [3.5])],
+                                 "id string, v array<double>")
+    got = {r.id: (r.bmu, r.bmu_dist) for r in
+           som.assign_bmu(vecs, "v", w, round_scale=0).collect()}
+    assert got == {"a": (0, 3.0), "b": (1, 3.0)}
